@@ -15,8 +15,9 @@ exposm/utils.py:38-48) with a distributable equi-joinable cell id:
   at 100 TB scale removes the PIP kernel from the vast interior of
   every polygon and leaves it only on the boundary ring.
 
-Everything is vectorized numpy (uint64 bit-twiddling); these run inside
-Arrow-batched pandas UDFs, never per-row Python.
+Everything is vectorized numpy (uint64 bit-twiddling) on the broadcast
+side; the per-row encode over the fact table is `cell_column`, the same
+arithmetic as a JVM column expression — never per-row Python.
 """
 
 from __future__ import annotations
@@ -90,7 +91,8 @@ def encode(lon: np.ndarray, lat: np.ndarray, res: int = DEFAULT_RES) -> np.ndarr
 def cell_column(lon, lat, res: int = DEFAULT_RES):
     """The encoder as a pure JVM column expression (whole-stage codegen,
     zero Python in the hot path). Bit-for-bit identical to encode()
-    (tested). Null/NaN coords -> null cell.
+    (tested). Null/NaN/infinite coords -> null cell, as encode() maps
+    them to -1.
 
     At 100 TB the cell encode runs on every row of the fact table;
     keeping it inside Tungsten codegen instead of an Arrow round-trip
@@ -124,8 +126,10 @@ def cell_column(lon, lat, res: int = DEFAULT_RES):
         .bitwiseOR(F.shiftleft(spread(j), 1))
         .bitwiseOR(F.lit(res << 58))
     )
-    return F.when(lon.isNotNull() & lat.isNotNull()
-                  & ~F.isnan(lon) & ~F.isnan(lat), cell)
+    # |v| < inf is false for NaN and +-inf and null for null: the
+    # isfinite() mask of encode()
+    inf = F.lit(float("inf"))
+    return F.when((F.abs(lon) < inf) & (F.abs(lat) < inf), cell)
 
 
 def cell_to_ij(cell: np.ndarray):

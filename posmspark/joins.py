@@ -47,25 +47,6 @@ COVER_RES = 10
 
 
 # ---------------------------------------------------------------------------
-# cell encode UDF
-
-
-# cell_udf (the default-resolution numpy encoder) is defined at the
-# bottom of this module as cell_udf_at(cells.DEFAULT_RES) — ONE
-# definition of the precision-critical masked-IntegerArray handling.
-
-
-def with_cell(df: DataFrame, lon_col: str = "lon", lat_col: str = "lat",
-              out_col: str = "cell") -> DataFrame:
-    """Cell encode via the pure-JVM bit-twiddling expression (codegen'd;
-    cell_udf is the Arrow/numpy equivalent, kept for kernel parity
-    tests and non-SQL callers)."""
-    return df.withColumn(
-        out_col, cells.cell_column(F.col(lon_col), F.col(lat_col))
-    )
-
-
-# ---------------------------------------------------------------------------
 # boundary preparation (reference passes A/B/C -> one hierarchy build)
 
 
@@ -537,7 +518,8 @@ def pip_join(points: DataFrame, prepared: PreparedBoundaries,
     bc_index = sc.broadcast(prepared.resolve_index())
 
     lcols = [f"osm_id_l{lv}" for lv in range(prepared.n_levels)]
-    pts = points if "cell" in points.columns else with_cell(points)
+    pts = points if "cell" in points.columns else points.withColumn(
+        "cell", cells.cell_column(F.col("lon"), F.col("lat")))
     resolve = _resolve_udf(bc_index, bc_polys, prepared.cover_res,
                            prepared.n_levels)
     r = pts.withColumn("_r", resolve(F.col("lon"), F.col("lat")))
@@ -630,7 +612,7 @@ def knn_cellring(points: DataFrame, sites_pdf: pd.DataFrame, k: int,
     scell = cells.encode(slon, slat, res)
 
     pts = points.select(point_key, "lon", "lat").withColumn(
-        "qcell", cell_udf_at(res)(F.col("lon"), F.col("lat"))
+        "qcell", cells.cell_column(F.col("lon"), F.col("lat"), res)
     ).filter(F.col("qcell").isNotNull())
 
     # Cell dimensions (degrees/meters) for the termination guarantee.
@@ -733,7 +715,7 @@ def knn_cellring(points: DataFrame, sites_pdf: pd.DataFrame, k: int,
         )
         # Materialize this round ONCE and cut lineage: without this,
         # every later ring (and the final collect) replays the whole
-        # upstream DAG — ingest UDF included — once per iteration
+        # upstream DAG — ingest included — once per iteration
         # (VERDICT r01 item 4). localCheckpoint is eager, so `done` and
         # `unresolved` below are cheap reads of stored blocks.
         agg = agg.persist()
@@ -749,17 +731,6 @@ def knn_cellring(points: DataFrame, sites_pdf: pd.DataFrame, k: int,
     return resolved
 
 
-def cell_udf_at(res: int):
-    @pandas_udf(T.LongType())
-    def _u(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        out = cells.encode(lon.to_numpy(dtype=np.float64, na_value=np.nan),
-                           lat.to_numpy(dtype=np.float64, na_value=np.nan), res)
-        # masked IntegerArray, never a float64 detour (mantissa too small)
-        return pd.Series(pd.arrays.IntegerArray(out, mask=(out < 0)))
-
-    return _u
-
-
 def haversine_expr(lon1, lat1, lon2, lat2):
     """Haversine distance in meters as a JVM-side column expression
     (whole-stage-codegen'd; no Python in the hot path)."""
@@ -771,9 +742,3 @@ def haversine_expr(lon1, lat1, lon2, lat2):
         + F.cos(rlat1) * F.cos(rlat2) * F.pow(F.sin((rlon2 - rlon1) / 2), 2)
     )
     return R * F.asin(F.sqrt(F.least(a, F.lit(1.0))))
-
-
-#: Vectorized numpy cell encoder at the default resolution (null coords
-#: -> null cell); single source of the masked-IntegerArray nullability
-#: handling (float64 would destroy the id's low Morton bits).
-cell_udf = cell_udf_at(cells.DEFAULT_RES)

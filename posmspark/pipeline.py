@@ -149,8 +149,8 @@ def run_pipeline(
     def build_ingest(df: DataFrame = None) -> DataFrame:
         # pure-JVM ingest: byte-identity verify + geocode + cell encode
         # inside whole-stage codegen — the wide html/text columns never
-        # cross into Python (bit-identical to the fused Arrow kernel,
-        # parity-tested). Violations are routed out (observable via
+        # cross into Python (bit-identical to the pandas reference
+        # kernel under tests/). Violations are routed out (observable via
         # lineage row counts), never silently fixed.
         ing = textx.with_ingest_jvm(pages_df() if df is None else df)
         return ing.filter(F.col("text_ok")).drop("text_ok", "html")

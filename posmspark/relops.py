@@ -1537,8 +1537,7 @@ def q_doc_fingerprint(spark, sf):
     """Document fingerprinting (task-brief op): minimum window-hash
     fingerprint — hash every 16-char window, keep the minimum (the
     winnowing/Rabin-Karp selection rule; md5 stands in for the
-    polynomial so DuckDB reproduces it bit-for-bit; the O(n) polynomial
-    rolling kernel lives in textx.rolling_fingerprint, unit-tested).
+    polynomial so DuckDB reproduces it bit-for-bit).
     Near-identical docs share fingerprints; output is the distinct
     fingerprint census."""
     d = _t(spark, sf, "documents")

@@ -15,7 +15,7 @@
   (and, on a real cluster, to arbitrarily many partitions).
 
 The html <-> text relationship is byte-exact: html = PRE + utf8(text) + POST,
-and textx.extract_text recovers text byte-identically (the north-rule
+and textx.with_extracted_text recovers text byte-identically (the north-rule
 invariant).
 """
 
@@ -173,16 +173,6 @@ def gen_admin_mapping_pdf() -> pd.DataFrame:
 
 
 ADMIN_DEFAULTS = {"admin_level_1": 4, "admin_level_2": 6, "admin_level_3": 8}
-
-
-def boundaries_df(spark: SparkSession) -> DataFrame:
-    """Boundaries fixture as a Spark DataFrame."""
-    pdf = gen_boundaries_pdf()
-    return spark.createDataFrame(pdf)
-
-
-def admin_mapping_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(gen_admin_mapping_pdf())
 
 
 def pages_df(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:

@@ -193,31 +193,6 @@ def test_pip_horizontal_edges_consistent():
     assert list(a) == [True, False, False, False]
 
 
-def test_rolling_window_hashes_match_bruteforce():
-    """Vectorized Rabin-Karp equals the per-window definition, and the
-    rolling property holds: editing one byte changes exactly the
-    windows that cover it."""
-    from posmspark import textx
-
-    data = b"the quick brown fox jumps over the lazy dog 0123456789"
-    w = textx.FP_WINDOW
-    got = textx.rolling_window_hashes(data, w)
-    assert len(got) == len(data) - w + 1
-    B = int(textx.FP_BASE)
-    for i in range(0, len(got), 7):
-        exp = 0
-        for j in range(w):
-            exp = (exp * B + data[i + j]) % (1 << 64)
-        assert int(got[i]) == exp, i
-
-    edited = bytearray(data)
-    edited[20] ^= 0xFF
-    got2 = textx.rolling_window_hashes(bytes(edited), w)
-    diff = got != got2
-    assert diff.sum() == w  # exactly the w windows covering byte 20
-    assert set(np.nonzero(diff)[0]) == set(range(20 - w + 1, 21))
-
-
 def test_clip_ring_bbox_basic():
     rect = np.array([[0., 0.], [4., 0.], [4., 4.], [0., 4.], [0., 0.]])
     out = geom.clip_ring_bbox(rect, (1, 1, 3, 5))

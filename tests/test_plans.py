@@ -49,7 +49,7 @@ def test_pipeline_prejoin_is_shuffle_free(spark):
     pages = synth.pages_df(spark, 100)
     from posmspark import textx
 
-    ok = textx.with_ingest(pages).filter(F.col("text_ok")).drop("text_ok", "html")
+    ok = textx.with_ingest_jvm(pages).filter(F.col("text_ok")).drop("text_ok", "html")
     pts = ok.filter(F.col("lat").isNotNull()).select(
         "url", "warc_ts", "lang", "lon", "lat", "cell")
     assigned = pip_join(pts, default_prepared(), spark, keep_unmatched=False)
@@ -73,7 +73,7 @@ def test_salted_exact_distinct_matches_plain(spark):
     from posmspark.joins import pip_join
     from posmspark.pipeline import default_prepared
 
-    ok = textx.with_ingest(pages).filter(
+    ok = textx.with_ingest_jvm(pages).filter(
         F.col("text_ok") & F.col("lat").isNotNull()
     ).select("url", "lon", "lat", "cell")
     assigned = pip_join(ok, default_prepared(), spark, keep_unmatched=False)

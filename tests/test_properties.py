@@ -9,7 +9,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from posmspark import cells, dissolve, geom, textx
+from posmspark import cells, dissolve, geom
 
 lon_s = st.floats(min_value=-180.0, max_value=179.999999,
                   allow_nan=False, allow_infinity=False)
@@ -150,22 +150,6 @@ def test_dissolve_grid_area_conserved(nx, ny):
 def geom_rect(x0, y0, x1, y1):
     return np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]],
                     dtype=np.float64)
-
-
-@settings(max_examples=100, deadline=None)
-@given(data=st.binary(min_size=20, max_size=200),
-       pos=st.integers(min_value=0, max_value=19))
-def test_rolling_hash_locality(data, pos):
-    """A 1-byte edit changes only windows covering that byte."""
-    w = textx.FP_WINDOW
-    edited = bytearray(data)
-    edited[pos] = (edited[pos] + 1) % 256
-    h1 = textx.rolling_window_hashes(data, w)
-    h2 = textx.rolling_window_hashes(bytes(edited), w)
-    diff = np.nonzero(h1 != h2)[0]
-    lo, hi = max(0, pos - w + 1), min(len(h1) - 1, pos)
-    assert set(diff) <= set(range(lo, hi + 1))
-    assert len(diff) >= 1
 
 
 @settings(max_examples=50, deadline=None)

@@ -1,10 +1,12 @@
 """End-to-end spine: synth pages -> byte-identical text extraction ->
 geocode -> cell encode -> broadcast PIP join -> admin assignment.
 
-This exercises the whole engine spine (scan -> Arrow UDF -> broadcast
-join -> window -> agg) on local Spark, including the north-rule
-invariants: byte-identity per url, exact join assignments vs a pure
-numpy oracle, and plan shape (broadcast, no fact-side pre-join shuffle).
+This exercises the whole engine spine (scan -> JVM ingest expressions
+-> broadcast PIP join -> window -> agg) on local Spark, including the
+north-rule invariants: byte-identity per url, ingest parity with the
+pandas reference kernel (tests/ingest_reference.py), exact join
+assignments vs a pure numpy oracle, and plan shape (broadcast, no
+fact-side pre-join shuffle).
 """
 
 import numpy as np
@@ -12,8 +14,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from posmspark import geom, synth, textx
-from posmspark.joins import pip_join, prepare_boundaries, with_cell
+from ingest_reference import ingest_reference
+from posmspark import cells, geom, synth, textx
+from posmspark.joins import knn_cellring, pip_join, prepare_boundaries
 
 N_PAGES = 2000
 
@@ -21,6 +24,12 @@ N_PAGES = 2000
 @pytest.fixture(scope="module")
 def pages(spark):
     return synth.pages_df(spark, N_PAGES).cache()
+
+
+@pytest.fixture(scope="module")
+def geo(pages):
+    """Geotagged pages with lat/lon/cell from the production ingest."""
+    return textx.with_ingest_jvm(pages).filter(F.col("lat").isNotNull())
 
 
 @pytest.fixture(scope="module")
@@ -54,9 +63,27 @@ def test_geocode_parse(spark, pages):
     assert bad == 0
 
 
-def _assert_matches_numpy_oracle(spark, pages, prepared):
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _assert_matches_reference(df, out):
+    """`out` (with_ingest_jvm of `df`) equals ingest_reference of
+    df.toPandas() on every ingest column; rows are collected, not
+    toPandas'd, so cell ids stay exact ints."""
+    cols = ["text_ok", "lat", "lon", "cell"]
+    pdf = df.toPandas()
+    ref = ingest_reference(pdf).set_index(pdf["url"])
+    got = {r["url"]: r for r in out.select("url", *cols).collect()}
+    assert set(got) == set(ref.index)
+    for url, exp in ref.to_dict("index").items():
+        for c in cols:
+            vg, ve = got[url][c], exp[c]
+            assert (vg is None and pd.isna(ve)) or vg == ve, (url, c, vg, ve)
+
+
+def _assert_matches_numpy_oracle(spark, geo, prepared):
     lcols = [f"osm_id_l{lv}" for lv in range(prepared.n_levels)]
-    geo = with_cell(textx.with_geocode(pages)).filter(F.col("lat").isNotNull())
     out = pip_join(geo, prepared, spark).select("url", "lon", "lat", *lcols)
     got = out.toPandas().set_index("url").sort_index()
 
@@ -79,13 +106,13 @@ def _assert_matches_numpy_oracle(spark, pages, prepared):
                 url, lv, row[col], exp)
 
 
-def test_pip_join_matches_numpy_oracle(spark, pages, prepared):
+def test_pip_join_matches_numpy_oracle(spark, geo, prepared):
     """Join assignments must equal a brute-force numpy oracle exactly
     (the reference-semantics golden: first insert_order match wins)."""
-    _assert_matches_numpy_oracle(spark, pages, prepared)
+    _assert_matches_numpy_oracle(spark, geo, prepared)
 
 
-def test_pip_join_matches_numpy_oracle_4_levels(spark, pages):
+def test_pip_join_matches_numpy_oracle_4_levels(spark, geo):
     """Same golden with a 4-deep hierarchy (reference levels 1..10,
     extract_all.py:92-121): the generalized resolve index + schema must
     assign osm_id_l3 exactly."""
@@ -96,12 +123,11 @@ def test_pip_join_matches_numpy_oracle_4_levels(spark, pages):
     l3 = prepared4.levels_pdf.query("adminlevel == 3")
     assert set(l3.osm_id) == {"R1111", "R1112"}
     assert set(l3.is_in) == {"R1110"}
-    _assert_matches_numpy_oracle(spark, pages, prepared4)
+    _assert_matches_numpy_oracle(spark, geo, prepared4)
 
 
-def test_pip_join_counts_stable_across_parallelism(spark, pages, prepared):
+def test_pip_join_counts_stable_across_parallelism(spark, geo, prepared):
     """North-rule invariant: identical results across partition counts."""
-    geo = with_cell(textx.with_geocode(pages)).filter(F.col("lat").isNotNull())
     a = pip_join(geo.repartition(4), prepared, spark)
     b = pip_join(geo.repartition(32), prepared, spark)
     agg_a = a.groupBy("osm_id_l0", "osm_id_l1", "osm_id_l2").count()
@@ -110,29 +136,26 @@ def test_pip_join_counts_stable_across_parallelism(spark, pages, prepared):
     assert agg_b.exceptAll(agg_a).count() == 0
 
 
-def test_pip_join_plan_is_map_only(spark, pages, prepared):
+def test_pip_join_plan_is_map_only(spark, geo, prepared):
     """The assignment operator must be shuffle-free: broadcast prepared
     index + one Arrow UDF, no Exchange anywhere in its plan."""
-    geo = with_cell(textx.with_geocode(pages)).filter(F.col("lat").isNotNull())
     out = pip_join(geo, prepared, spark)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(out)
     assert "Exchange" not in plan, plan
     assert "ArrowEvalPython" in plan or "Python" in plan
 
 
 def test_fused_ingest_matches_reference_kernels(spark, pages):
-    """with_ingest (fused hot path) must agree with the standalone
-    extract_text_udf + geocode_udf reference kernels row-for-row."""
-    from posmspark.joins import cell_udf
-
-    fused = textx.with_ingest(pages).select("url", "text_ok", "lat", "lon",
-                                            "cell")
+    """with_ingest_jvm (fused hot path) must agree row-for-row with the
+    standalone with_extracted_text + with_geocode + cell_column."""
+    fused = textx.with_ingest_jvm(pages).select("url", "text_ok", "lat",
+                                                "lon", "cell")
     sep0 = textx.with_geocode(textx.with_extracted_text(pages))
     sep = sep0.select(
         "url",
         F.col("text_extracted").eqNullSafe(F.col("text")).alias("text_ok"),
         "lat", "lon",
-        cell_udf(F.col("lon"), F.col("lat")).alias("cell"),
+        cells.cell_column(F.col("lon"), F.col("lat")).alias("cell"),
     )
     assert fused.exceptAll(sep).count() == 0
     assert sep.exceptAll(fused).count() == 0
@@ -140,23 +163,51 @@ def test_fused_ingest_matches_reference_kernels(spark, pages):
     assert fused.filter(~F.col("text_ok")).count() == 0
 
 
-def test_jvm_cell_encoder_matches_numpy(spark, pages):
+def test_jvm_cell_encoder_matches_numpy(spark, pages, monkeypatch):
     """cell_column (JVM bit-twiddling) must be bit-identical to the
-    numpy encoder used on the broadcast/cover side."""
-    from posmspark import cells
-    from posmspark.joins import cell_udf
+    numpy encoder used on the broadcast/cover side, at every resolution
+    knn_cellring is run with and at DEFAULT_RES, on the fixture points
+    plus null/NaN/infinite coords, both poles and lon +-180; and the
+    JVM row kernels (extract, geocode, knn_cellring's point side) run
+    with no Python evaluation node."""
+    nan, inf = float("nan"), float("inf")
+    edge = spark.createDataFrame(
+        [(None, 10.0), (10.0, None), (None, None), (nan, 1.0), (1.0, nan),
+         (inf, 0.0), (0.0, -inf), (0.0, 90.0), (0.0, -90.0), (180.0, 45.0),
+         (-180.0, -45.0), (180.0, 90.0), (-180.0, -90.0)],
+        "lon double, lat double")
+    pts = textx.with_geocode(pages).select("lon", "lat").unionByName(edge)
+    for res in (6, 7, 8, cells.DEFAULT_RES):
+        rows = pts.select("lon", "lat", cells.cell_column(
+            F.col("lon"), F.col("lat"), res).alias("cell")).collect()
+        lon, lat = (np.array([np.nan if r[c] is None else r[c]
+                              for r in rows]) for c in ("lon", "lat"))
+        got = np.array([-1 if r["cell"] is None else r["cell"]
+                        for r in rows], dtype=np.int64)
+        assert np.array_equal(got, cells.encode(lon, lat, res)), res
 
-    geo = textx.with_geocode(pages).filter(F.col("lat").isNotNull())
-    both = geo.select(
-        cells.cell_column(F.col("lon"), F.col("lat")).alias("jvm"),
-        cell_udf(F.col("lon"), F.col("lat")).alias("py"),
-    )
-    assert both.filter(~F.col("jvm").eqNullSafe(F.col("py"))).count() == 0
+    # knn_cellring's point side is the left input of its first ring join
+    join_inputs = []
+    join = type(pages).join
+
+    def spy(self, *args, **kwargs):
+        join_inputs.append(_plan(self))
+        return join(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(pages), "join", spy)
+    sites = pd.DataFrame({"site_id": ["a", "b"], "lon": [0.0, 20.0],
+                          "lat": [0.0, 10.0]})
+    knn_cellring(textx.with_geocode(pages).filter(F.col("lat").isNotNull()),
+                 sites, k=1, spark=spark, res=8)
+    monkeypatch.undo()
+    assert join_inputs and "qcell" in join_inputs[0]
+    for plan in (_plan(textx.with_geocode(pages)),
+                 _plan(textx.with_extracted_text(pages)), join_inputs[0]):
+        assert "Python" not in plan and "Arrow" not in plan, plan[:800]
 
 
-def test_hot_cell_skew_exists(spark, pages):
+def test_hot_cell_skew_exists(spark, geo):
     """The synthetic generator must produce the mandated hot-cell skew."""
-    geo = with_cell(textx.with_geocode(pages)).filter(F.col("lat").isNotNull())
     top = (geo.groupBy("cell").count().orderBy(F.desc("count")).limit(1)
            .collect()[0])
     total = geo.count()
@@ -165,14 +216,11 @@ def test_hot_cell_skew_exists(spark, pages):
 
 def test_jvm_ingest_matches_arrow_kernel(spark, pages):
     """The pure-JVM ingest path (pipeline hot path) must be
-    bit-identical to the fused Arrow kernel on every column, and its
-    plan must contain NO Python evaluation."""
-    cols = ["url", "text_ok", "lat", "lon", "cell"]
-    jvm = textx.with_ingest_jvm(pages).select(cols)
-    py = textx.with_ingest(pages).select(cols)
-    assert jvm.exceptAll(py).count() == 0
-    assert py.exceptAll(jvm).count() == 0
-    plan = jvm._jdf.queryExecution().executedPlan().toString()
+    bit-identical to the pandas reference kernel on every column, and
+    its plan must contain NO Python evaluation."""
+    jvm = textx.with_ingest_jvm(pages)
+    _assert_matches_reference(pages, jvm)
+    plan = _plan(jvm)
     assert "Python" not in plan and "Arrow" not in plan, plan[:800]
 
 
@@ -243,7 +291,7 @@ def test_pip_join_random_hierarchy_fuzz(spark):
             "url": [f"u{i}" for i in range(len(lon))],
             "lon": lon, "lat": lat}))
         lcols = [f"osm_id_l{lv}" for lv in range(prepared.n_levels)]
-        got = (pip_join(with_cell(pts), prepared, spark)
+        got = (pip_join(pts, prepared, spark)
                .select("url", "lon", "lat", *lcols)
                .toPandas().set_index("url"))
 
@@ -266,10 +314,10 @@ def test_pip_join_random_hierarchy_fuzz(spark):
 
 
 def test_ingest_kernels_agree_on_adversarial_html(spark):
-    """r03 fuzz: the Arrow and JVM ingest kernels must agree cell-for-
-    cell on adversarial inputs — malformed UTF-8 at the slice cut and
-    raw binary junk ROUTE OUT as text_ok=False rather than crashing the
-    task (the old Arrow kernel decoded the slice and died)."""
+    """r03 fuzz: the JVM ingest and the pandas reference kernel must
+    agree cell-for-cell on adversarial inputs — malformed UTF-8 at the
+    slice cut and raw binary junk ROUTE OUT as text_ok=False rather
+    than crashing the task."""
     import random
 
     rng = random.Random(7)
@@ -285,14 +333,12 @@ def test_ingest_kernels_agree_on_adversarial_html(spark):
                      bytes([rng.randrange(256)
                             for _ in range(rng.randint(0, 40))]),
                      "claim", "en"))
+    for i in range(100, 110):
+        # well-framed html whose body is cut inside a multi-byte char
+        body = f"geo: {i}.50000, -{i}.25000 日本語 😀"
+        rows.append((f"u{i}", pd.Timestamp("2025-01-01", tz="UTC"),
+                     synth.HTML_PRE + body.encode()[:-(i % 3 + 1)]
+                     + synth.HTML_POST, body, "en"))
     df = spark.createDataFrame(pd.DataFrame(
         rows, columns=["url", "warc_ts", "html", "text", "lang"]))
-    cols = ["text_ok", "lat", "lon", "cell"]
-    a = textx.with_ingest(df).select("url", *cols).toPandas().set_index(
-        "url").sort_index()
-    b = textx.with_ingest_jvm(df).select("url", *cols).toPandas().set_index(
-        "url").sort_index()
-    for u in a.index:
-        for c in cols:
-            va, vb = a.loc[u, c], b.loc[u, c]
-            assert (pd.isna(va) and pd.isna(vb)) or va == vb, (u, c, va, vb)
+    _assert_matches_reference(df, textx.with_ingest_jvm(df))
