@@ -9,7 +9,9 @@ Usage (local sandbox):
 On a cluster the same invocation runs unchanged: the pages table is any
 parquet/Iceberg path with columns (url, warc_ts, html, text, lang); all
 parallelism comes from input splits + shuffle partitions. Checkpoints
-land under --workdir with per-stage manifests (resume on rerun).
+land under --workdir with per-stage manifests (resume on rerun); the
+job prints one summary line per stage from them (n_rows, n_partitions,
+last_recomputed, wall_ms), then the result line.
 
 Build the py-files archive with:
   (cd /root/repo && zip -r /tmp/posmspark.zip posmspark)
@@ -45,7 +47,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from posmspark import synth
+    from posmspark import lineage, synth
     from posmspark.pipeline import run_pipeline
     from posmspark.session import get_spark
 
@@ -71,7 +73,22 @@ def main() -> None:
         sid = tablefmt.commit_overwrite(
             out["tiles"], args.table_out, partition_by=["osm_id_l0"])
         line += f" table_snapshot={sid}"
+    for stage in ("ingest", "assign", "tiles"):
+        print(stage_summary(stage, lineage.read_manifest(
+            os.path.join(args.workdir, f"stage_{stage}")) or {}))
     print(line)
+
+
+def stage_summary(stage: str, man: dict) -> str:
+    """One line per stage, read from its manifest (no pass over the
+    data); last_recomputed is '-' for a whole-stage checkpoint, which
+    records no per-key recompute."""
+    recomputed = man.get("last_recomputed")
+    return (f"stage={stage} n_rows={man.get('n_rows')} "
+            f"n_partitions={man.get('n_partitions')} "
+            f"last_recomputed="
+            f"{'-' if recomputed is None else ','.join(recomputed)} "
+            f"wall_ms={man.get('wall_ms')}")
 
 
 if __name__ == "__main__":

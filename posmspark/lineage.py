@@ -7,14 +7,17 @@ and batch re-runs via osmupdate diffs (POSMmanagement/osmdata.py:87-134).
 Our Spark restatement (SURVEY.md §2.8): every pipeline stage writes
 Parquet + a _manifest.json carrying
 
-  {stage, input_fingerprint, n_rows, n_partitions,
+  {stage, input_fingerprint, schema, n_rows, n_partitions,
    partitions: [{partition_id, rows}...], wall_ms}
 
 A rerun whose (stage, input_fingerprint) matches an existing manifest
 skips the stage and reads the checkpoint — resume-from-any-stage. The
-per-partition row counts are the north rule's lineage metrics; at
-cluster scale they come from one cheap groupBy(spark_partition_id())
-over the just-written output.
+per-partition row counts are the north rule's lineage metrics. They
+cost no pass over the data: a full write's counts are the num_rows of
+the parquet footers it just wrote, and an incremental rebuild's come
+from the one per-key count it already runs to find the keys it emitted.
+Every checkpoint read passes the manifest's stored schema, so it
+launches no schema-inference job either.
 """
 
 from __future__ import annotations
@@ -25,6 +28,9 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+from posmspark.tablefmt import collect_files
 
 MANIFEST = "_manifest.json"
 
@@ -47,16 +53,34 @@ def read_manifest(out_dir: str) -> dict | None:
         return json.load(f)
 
 
-def partition_lineage(df: DataFrame) -> list[dict]:
-    """Per-partition row counts of a materialized DataFrame."""
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .count()
-        .orderBy("partition_id")
-        .collect()
-    )
-    return [{"partition_id": int(r["partition_id"]), "rows": int(r["count"])}
-            for r in rows]
+def _write_manifest(out_dir: str, manifest: dict) -> None:
+    with open(_manifest_path(out_dir), "w") as f:
+        json.dump(manifest, f, indent=1)
+
+
+def _read_checkpoint(spark: SparkSession, out_dir: str,
+                     man: dict | None) -> DataFrame:
+    """Read a checkpoint by its manifest's stored schema: no footer-
+    sampling inference job. A manifest without one (written before
+    schemas were stored) falls back to inference."""
+    reader = spark.read
+    if man and man.get("schema"):
+        reader = reader.schema(StructType.fromJson(man["schema"]))
+    return reader.parquet(out_dir)
+
+
+def _as_nullable(t):
+    """Spark's asNullable: what a parquet read reports for written data
+    (every field, array element and map value nullable)."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _as_nullable(f.dataType),
+                                       True, f.metadata) for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType),
+                       True)
+    return t
 
 
 def run_stage(
@@ -72,28 +96,39 @@ def run_stage(
     build() -> DataFrame is only invoked on a cache miss. The stage is
     atomic: parquet lands first, the manifest last, so a killed run
     leaves no manifest and simply recomputes (kill-and-resume test).
+
+    Manifest: {stage, input_fingerprint, schema, n_rows, n_partitions,
+    partitions: [{partition_id, rows}], wall_ms}. `partition_id` is
+    the ordinal of a written part file in name order (part-00000...,
+    so the write task's order; a task that wrote no rows has no file)
+    and `rows` is that file's parquet-footer row count. `schema` is
+    StructType.jsonValue() of what spark.read.parquet(out_dir) infers;
+    resuming reads the checkpoint by it, so a resume runs no Spark job.
     """
     man = read_manifest(out_dir)
     if not force and man and man.get("input_fingerprint") == input_fingerprint \
             and man.get("stage") == stage:
-        return spark.read.parquet(out_dir)
+        out = _read_checkpoint(spark, out_dir, man)
+        if not man.get("schema"):
+            _write_manifest(out_dir, {**man, "schema": out.schema.jsonValue()})
+        return out
 
     t0 = time.monotonic()
     df = build()
     df.write.mode("overwrite").parquet(out_dir)
-    out = spark.read.parquet(out_dir)
-    lineage = partition_lineage(out)
+    lineage = [{"partition_id": i, "rows": f["rows"]}
+               for i, f in enumerate(collect_files(out_dir))]
     manifest = {
         "stage": stage,
         "input_fingerprint": input_fingerprint,
+        "schema": _as_nullable(df.schema).jsonValue(),
         "n_rows": sum(p["rows"] for p in lineage),
         "n_partitions": len(lineage),
         "partitions": lineage,
         "wall_ms": int((time.monotonic() - t0) * 1000),
     }
-    with open(_manifest_path(out_dir), "w") as f:
-        json.dump(manifest, f, indent=1)
-    return out
+    _write_manifest(out_dir, manifest)
+    return _read_checkpoint(spark, out_dir, manifest)
 
 
 def _fingerprint_aggs():
@@ -202,22 +237,37 @@ def run_stage_incremental(
     Removed input keys drop their output partitions. Unchanged
     partitions are never read, rebuilt, or rewritten.
 
-    Manifest v2 adds {partition_col, input_partitions: {key: fp},
-    last_recomputed: [keys], runs}; per-output-partition row counts
-    stay the lineage metric.
+    Manifest v2: {stage, partition_col, input_partitions: {key: fp},
+    last_recomputed: [keys], last_removed: [keys], runs, schema,
+    n_rows, n_partitions, partitions: [{partition_key, rows}], wall_ms}.
+    Per-output-partition row counts stay the lineage metric, with no
+    pass of their own: a full write reads them from the parquet footers
+    under each <partition_col>=<key>/; a rerun takes the changed keys'
+    counts from the rebuild's per-key count (the same job that finds
+    the keys it emitted) and carries the unchanged keys' counts over
+    from the previous manifest. `schema` is what spark.read.parquet
+    (out_dir) infers, partition column type included: inferred once per
+    full write (or when the output key set changes, as the inferred
+    partition type depends on the keys) and carried forward otherwise.
 
     input_df may be a DataFrame (content fingerprints — one aggregation
     scan) or a PATH to a hive-partitioned parquet dir (file-metadata
-    fingerprints — ZERO data scan on reruns; the 100-TB mode).
+    fingerprints — ZERO data scan on reruns; the 100-TB mode). A path
+    is read only when some key changed, by its stored schema when it is
+    itself a checkpoint, so an unchanged rerun runs no Spark job.
     """
     import shutil
 
     man = read_manifest(out_dir)
-    if isinstance(input_df, str):
-        in_fps = fingerprint_partition_dir(input_df, partition_col)
-        input_df = spark.read.parquet(input_df)
-    else:
-        in_fps = fingerprint_partitions(input_df, partition_col)
+    in_dir = input_df if isinstance(input_df, str) else None
+    in_fps = (fingerprint_partition_dir(in_dir, partition_col) if in_dir
+              else fingerprint_partitions(input_df, partition_col))
+
+    def read_input() -> DataFrame:
+        if in_dir is None:
+            return input_df
+        return _read_checkpoint(spark, in_dir, read_manifest(in_dir))
+
     # Hive path escaping (':' -> '%3A' etc.) would desync the raw key
     # strings used for rmtree/isin from the escaped directory names —
     # silently resurrecting removed partitions or deleting-without-
@@ -243,21 +293,30 @@ def run_stage_incremental(
     if not compatible:
         changed = sorted(in_fps)
         removed: list[str] = []
-        df = build(input_df)
+        df = build(read_input())
         (df.write.mode("overwrite").partitionBy(partition_col)
            .parquet(out_dir))
+        counts: dict[str, int] = {}
+        for f in collect_files(out_dir):
+            k = f["partition"][partition_col]
+            counts[k] = counts.get(k, 0) + f["rows"]
+        schema = None
     else:
         changed = sorted(
             k for k, fp in in_fps.items() if prev_fps.get(k) != fp)
         removed = sorted(k for k in prev_fps if k not in in_fps)
+        prev_counts = {p["partition_key"]: p["rows"]
+                       for p in man.get("partitions", [])}
+        counts = {k: n for k, n in prev_counts.items()
+                  if k in in_fps and k not in changed}
         for k in removed:
             shutil.rmtree(
                 os.path.join(out_dir, f"{partition_col}={k}"),
                 ignore_errors=True)
         if changed:
-            subset = input_df.filter(
+            subset = read_input().filter(
                 F.col(partition_col).cast("string").isin(changed))
-            # persist so the write and the emitted-keys collect see ONE
+            # persist so the write and the emitted-keys count see ONE
             # evaluation of build(): re-executing a nondeterministic or
             # input-racing build could make `emitted` disagree with what
             # was written, wrongly rmtree-ing a written partition or
@@ -270,9 +329,9 @@ def run_stage_incremental(
             # result — a changed key whose rebuild emits 0 rows must
             # still drop its stale output partition.
             emitted = {
-                str(r["_pk"]) for r in out_sub.select(
+                str(r["_pk"]): int(r["count"]) for r in out_sub.groupBy(
                     F.col(partition_col).cast("string").alias("_pk")
-                ).distinct().collect()
+                ).count().collect()
             }
             out_sub.unpersist()
             for k in changed:
@@ -280,12 +339,12 @@ def run_stage_incremental(
                     shutil.rmtree(
                         os.path.join(out_dir, f"{partition_col}={k}"),
                         ignore_errors=True)
+            counts.update(emitted)
+        schema = man.get("schema") if set(counts) == set(prev_counts) \
+            else None
+    if schema is None:
+        schema = spark.read.parquet(out_dir).schema.jsonValue()
 
-    out = spark.read.parquet(out_dir)
-    lineage = (
-        out.groupBy(F.col(partition_col).cast("string").alias("_pk"))
-        .count().orderBy("_pk").collect()
-    )
     manifest = {
         "stage": stage,
         "partition_col": partition_col,
@@ -293,17 +352,15 @@ def run_stage_incremental(
         "last_recomputed": changed,
         "last_removed": removed,
         "runs": (man or {}).get("runs", 0) + 1,
-        "n_rows": sum(int(r["count"]) for r in lineage),
-        "n_partitions": len(lineage),
-        "partitions": [
-            {"partition_key": r["_pk"], "rows": int(r["count"])}
-            for r in lineage
-        ],
+        "schema": schema,
+        "n_rows": sum(counts.values()),
+        "n_partitions": len(counts),
+        "partitions": [{"partition_key": k, "rows": counts[k]}
+                       for k in sorted(counts)],
         "wall_ms": int((time.monotonic() - t0) * 1000),
     }
-    with open(_manifest_path(out_dir), "w") as f:
-        json.dump(manifest, f, indent=1)
-    return out
+    _write_manifest(out_dir, manifest)
+    return _read_checkpoint(spark, out_dir, manifest)
 
 
 def manifest_df(spark: SparkSession, out_dir: str) -> DataFrame:

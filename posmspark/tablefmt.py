@@ -79,10 +79,11 @@ def snapshots(table_dir: str) -> list[dict]:
     return out
 
 
-def _collect_files(data_dir: str) -> list[dict]:
-    """List parquet data files under one commit's data dir with row
+def collect_files(data_dir: str) -> list[dict]:
+    """List parquet data files under one write's output dir with row
     counts from the parquet FOOTER (no data scan) and the hive
-    partition values carried in the path."""
+    partition values carried in the path; a commit's file list and a
+    lineage stage manifest's row counts both come from here."""
     import pyarrow.parquet as pq
 
     files = []
@@ -168,7 +169,7 @@ def _write_data(df: DataFrame, table_dir: str, seq_hint: int,
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(data_dir)
-    files = _collect_files(data_dir)
+    files = collect_files(data_dir)
     return data_dir, files
 
 

@@ -1,11 +1,13 @@
 """Checkpoint/resume + per-partition lineage tests (SURVEY.md §2.8:
 stage manifests; kill-and-resume semantics; north-rule lineage rows)."""
 
+import itertools
 import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from posmspark import lineage, synth
 from posmspark.pipeline import run_pipeline
@@ -55,6 +57,65 @@ def test_killed_stage_recomputes(spark, tmp_path):
     assert lineage.read_manifest(out_dir)["n_rows"] == 10
 
 
+def _scan_counts(spark, out_dir, col):
+    """Per-key row counts by a real scan of the written output: the
+    oracle for a manifest's `partitions`."""
+    return {
+        r["_pk"]: r["count"] for r in spark.read.parquet(out_dir)
+        .groupBy(F.col(col).cast("string").alias("_pk")).count().collect()
+    }
+
+
+def _assert_stored_schema(spark, out_dir, man):
+    assert (StructType.fromJson(man["schema"])
+            == spark.read.parquet(out_dir).schema)
+
+
+def _job_count(spark, fn):
+    """Spark jobs fn() launches, read from its own job group."""
+    sc = spark.sparkContext
+    group = f"lineage-jobs-{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_job_groups = itertools.count()
+
+
+def test_stage_manifest_counts_are_per_part_file(spark, tmp_path):
+    """run_stage's counts come from the written files' footers: one
+    entry per part file in name order, each equal to a scan of that
+    file, and the stored schema is what a plain read infers."""
+    out_dir = str(tmp_path / "files")
+
+    def build():
+        return (spark.range(1000).repartition(4)
+                .withColumn("tags", F.array(F.col("id").cast("string")))
+                .withColumn("m", F.create_map(F.lit("k"), F.col("id"))))
+
+    out = lineage.run_stage(spark, "files", "fp", out_dir, build)
+    man = lineage.read_manifest(out_dir)
+    assert man["n_rows"] == out.count() == 1000
+    part_files = sorted(f for f in os.listdir(out_dir)
+                        if f.startswith("part-") and f.endswith(".parquet"))
+    assert man["n_partitions"] == len(man["partitions"]) == len(part_files)
+    per_file = {
+        os.path.basename(r["f"]): r["count"] for r in spark.read.parquet(
+            out_dir).groupBy(F.input_file_name().alias("f")).count().collect()
+    }
+    assert [p["rows"] for p in man["partitions"]] == [
+        per_file.get(f, 0) for f in part_files]
+    assert [p["partition_id"] for p in man["partitions"]] == list(
+        range(len(part_files)))
+    _assert_stored_schema(spark, out_dir, man)
+    assert out.schema == spark.read.parquet(out_dir).schema
+
+
 def test_pipeline_checkpoint_resume_identical(spark, tmp_path):
     """Full pipeline: second run resumes from checkpoints and the tile
     assignments are identical (north-rule resume invariant)."""
@@ -69,6 +130,7 @@ def test_pipeline_checkpoint_resume_identical(spark, tmp_path):
     for st in ["stage_ingest", "stage_assign", "stage_tiles"]:
         man = lineage.read_manifest(os.path.join(wd, st))
         assert man is not None and man["input_fingerprint"] == fp
+        _assert_stored_schema(spark, os.path.join(wd, st), man)
 
     # resume: stages must be read back, not recomputed — verify by
     # poisoning nothing but checking object identity via manifest mtimes
@@ -350,3 +412,154 @@ def test_incremental_random_mutation_sequence(spark, tmp_path):
                 key = rng.choice(sorted(state))
                 del state[key]
                 shutil.rmtree(os.path.join(in_dir, f"k={key}"))
+
+
+def test_incremental_manifest_counts_match_scan(spark, tmp_path):
+    """After every kind of rerun the manifest's per-key counts equal a
+    real groupBy count of the output (footers on full writes, the
+    rebuild's own key count plus carried-over counts on reruns), and
+    the stored schema equals what a plain read infers."""
+    out_dir = str(tmp_path / "counts")
+
+    def build(df):
+        # row-level and key-local; per-key counts differ and depend on v
+        return df.filter(F.col("v") % 3 != 0)
+
+    def run(df, force=False):
+        out = lineage.run_stage_incremental(
+            spark, "counts", df, out_dir, build, "country", force=force)
+        man = lineage.read_manifest(out_dir)
+        want = _scan_counts(spark, out_dir, "country")
+        assert {p["partition_key"]: p["rows"]
+                for p in man["partitions"]} == want
+        assert [p["partition_key"] for p in man["partitions"]] == sorted(
+            want)
+        assert man["n_rows"] == sum(want.values()) == out.count()
+        assert man["n_partitions"] == len(want)
+        _assert_stored_schema(spark, out_dir, man)
+        assert out.schema == spark.read.parquet(out_dir).schema
+        return man
+
+    base = _mk_input(spark, n_keys=4, rows_per_key=30)
+    man = run(base)                                        # 1. cold
+    assert man["last_recomputed"] == ["C0", "C1", "C2", "C3"]
+    cold = {p["partition_key"]: p["rows"] for p in man["partitions"]}
+    changed = base.filter((F.col("country") != "C1") | (F.col("id") >= 40))
+    man = run(changed)                                     # 2. one changed
+    assert man["last_recomputed"] == ["C1"]
+    assert {p["partition_key"]: p["rows"] for p in man["partitions"]
+            }["C1"] < cold["C1"]
+    smaller = changed.filter(F.col("country") != "C3")
+    man = run(smaller)                                     # 3. one removed
+    assert man["last_removed"] == ["C3"]
+    emptied = smaller.withColumn(                          # 4. zero rows
+        "v", F.when(F.col("country") == "C2", F.lit(0))
+        .otherwise(F.col("v")))
+    man = run(emptied)
+    assert man["last_recomputed"] == ["C2"]
+    assert {p["partition_key"] for p in man["partitions"]} == {"C0", "C1"}
+    man = run(emptied)                                     # 5. no change
+    assert man["last_recomputed"] == []
+    man = run(emptied, force=True)                         # 6. force
+    assert man["last_recomputed"] == ["C0", "C1", "C2"]
+
+
+def test_incremental_stored_schema_keeps_partition_type(spark, tmp_path):
+    """A numeric-looking key infers an int partition column; the stored
+    schema carries that type through reruns, and a change to the output
+    key set re-infers it (a plain read would now infer a string)."""
+    out_dir = str(tmp_path / "ints")
+
+    def mk(keys, bump=None):
+        df = spark.range(60).withColumn("k", (F.col("id") % 3).cast("int"))
+        if bump is not None:
+            df = df.withColumn("id", F.when(F.col("k") == bump,
+                                            F.col("id") + 100)
+                               .otherwise(F.col("id")))
+        df = df.filter(F.col("k").isin([k for k in keys if k != "x"])
+                       ).withColumn(
+            "k", F.col("k").cast("string"))
+        return df.union(spark.createDataFrame([(0, "x")], "id long, k string")
+                        ) if "x" in keys else df
+
+    def run(df):
+        out = lineage.run_stage_incremental(
+            spark, "ints", df, out_dir, lambda d: d, "k")
+        man = lineage.read_manifest(out_dir)
+        _assert_stored_schema(spark, out_dir, man)
+        assert out.schema == spark.read.parquet(out_dir).schema
+        assert {p["partition_key"]: p["rows"] for p in man["partitions"]
+                } == _scan_counts(spark, out_dir, "k")
+        return out
+
+    out = run(mk([0, 1, 2]))
+    assert out.schema["k"].dataType.typeName() == "integer"
+    out = run(mk([0, 1, 2], bump=1))
+    assert out.schema["k"].dataType.typeName() == "integer"
+    out = run(mk([0, 1, 2, "x"]))
+    assert out.schema["k"].dataType.typeName() == "string"
+
+
+def test_unchanged_reruns_launch_no_spark_job(spark, tmp_path):
+    """A no-change incremental rerun on a hive-path input and a resumed
+    run_stage read nothing: manifests carry counts and schema."""
+    in_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "out")
+    stage_dir = str(tmp_path / "stage")
+    _mk_input(spark, n_keys=4).write.partitionBy("country").parquet(in_dir)
+
+    def build(df):
+        return df.groupBy("country").agg(F.sum("v").alias("sv"))
+
+    def incremental():
+        lineage.run_stage_incremental(
+            spark, "jobs", in_dir, out_dir, build, "country")
+
+    def stage():
+        lineage.run_stage(spark, "jobs", "fp", stage_dir,
+                          lambda: spark.range(50))
+
+    # the counter sees the jobs of a real build
+    assert _job_count(spark, incremental) > 0
+    assert _job_count(spark, stage) > 0
+    assert _job_count(spark, incremental) == 0
+    assert lineage.read_manifest(out_dir)["last_recomputed"] == []
+    assert _job_count(spark, stage) == 0
+
+
+def test_manifest_without_schema_resumes_and_writes_it_back(spark, tmp_path):
+    """Manifests written before schemas were stored still resume (by
+    inference), give identical output, and get the key written back."""
+    in_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "out")
+    stage_dir = str(tmp_path / "stage")
+    _mk_input(spark, n_keys=4).write.partitionBy("country").parquet(in_dir)
+    builds = []
+
+    def build(df):
+        builds.append("inc")
+        return df.groupBy("country").agg(F.sum("v").alias("sv"))
+
+    def stage_build():
+        builds.append("stage")
+        return spark.range(50).withColumn("v", F.col("id") * 2)
+
+    first = sorted(map(tuple, lineage.run_stage_incremental(
+        spark, "bc", in_dir, out_dir, build, "country").collect()))
+    lineage.run_stage(spark, "bc", "fp", stage_dir, stage_build)
+    stage_first = sorted(map(tuple, spark.read.parquet(stage_dir).collect()))
+    for d in (out_dir, stage_dir):
+        man = lineage.read_manifest(d)
+        del man["schema"]
+        with open(os.path.join(d, lineage.MANIFEST), "w") as f:
+            json.dump(man, f)
+
+    again = lineage.run_stage_incremental(
+        spark, "bc", in_dir, out_dir, build, "country")
+    resumed = lineage.run_stage(spark, "bc", "fp", stage_dir, stage_build)
+    assert builds == ["inc", "stage"]
+    assert sorted(map(tuple, again.collect())) == first
+    assert sorted(map(tuple, resumed.collect())) == stage_first
+    assert lineage.read_manifest(out_dir)["last_recomputed"] == []
+    for d in (out_dir, stage_dir):
+        _assert_stored_schema(spark, d, lineage.read_manifest(d))

@@ -73,9 +73,12 @@ def test_pipeline_cli_incremental_rewrites_only_changed_partition(
             env={**os.environ, "SPARK_GRAFT_CPUS": "4"},
         )
         assert out.returncode == 0, out.stderr[-2000:]
+        summaries.append([ln for ln in out.stdout.splitlines()
+                          if ln.startswith("stage=")])
         return [ln for ln in out.stdout.splitlines()
                 if ln.startswith("assigned_docs=")][-1]
 
+    summaries = []
     line1 = run_cli()
 
     def part_mtimes(stage):
@@ -123,3 +126,17 @@ def test_pipeline_cli_incremental_rewrites_only_changed_partition(
         with open(os.path.join(wd, stage, "_manifest.json")) as f:
             man = json.load(f)
         assert man["last_recomputed"] == [victim], stage
+
+    # the per-stage summary is the manifests' own numbers
+    for lines in summaries:
+        assert [ln.split()[0] for ln in lines] == [
+            "stage=ingest", "stage=assign", "stage=tiles"]
+    for ln in summaries[-1]:
+        stage = ln.split()[0].split("=")[1]
+        with open(os.path.join(wd, f"stage_{stage}", "_manifest.json")) as f:
+            man = json.load(f)
+        recomputed = ",".join(man.get("last_recomputed", ["-"]))
+        assert ln == (f"stage={stage} n_rows={man['n_rows']} "
+                      f"n_partitions={man['n_partitions']} "
+                      f"last_recomputed={recomputed} "
+                      f"wall_ms={man['wall_ms']}"), ln
